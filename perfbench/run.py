@@ -37,18 +37,21 @@ WORKLOADS = {
     # @list, @reverse, @language, sameAs links, @graph docs, malformed
     # payloads), a resume rerun, then SPARQL templates and an upsert over
     # the stored buckets. The kernel, canonicalization, linking, the
-    # bucketed write and the query engine all sit on its path.
-    "build_serve": {"docs": 400, "buckets": 16, "malformed_share": 0.03,
-                    "query_rounds": 2, "upsert_docs": 5},
+    # bucketed write and the query engine all sit on its path. On 4 cores
+    # the build costs about 15 s of per-job overhead at any size up to a
+    # few thousand documents; 3000 documents is the most the run budget
+    # of the benchmark (about 70 s per run) allows.
+    "build_serve": {"docs": 3000, "buckets": 16, "malformed_share": 0.03,
+                    "query_rounds": 1, "upsert_docs": 5},
     # the cross-document curation operators (dedup, similarity,
     # textstats, sampling) on documents and embeddings with stated
     # exact/near-duplicate shares; no JSON-LD runs here, so a kernel or
-    # storage change predicts no movement.
+    # storage change predicts no movement. One cold pass per cycle; the
+    # DuckDB oracle of curate_corpus, run once per run, is quadratic in
+    # the documents.
     "curate": {"docs": 120, "vecs": 200, "exact_share": 0.05,
-               "near_share": 0.1, "vec_near_share": 0.1, "passes": 2},
+               "near_share": 0.1, "vec_near_share": 0.1, "passes": 1},
 }
-
-SETUP_ROUNDS = 3
 
 END_TO_END = {"setup_s": "s", "docs_per_s": "docs/s", "op_p50_s": "s",
               "cycle_s": "s", "peak_rss_mb": "MB"}
@@ -90,6 +93,10 @@ def _configure_environment(work: str, cpus: int,
     os.environ["SPARK_LOCAL_DIRS"] = f"{work}/spark-local"
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
     os.environ["SPARK_DRIVER_MEM"] = "1g"
+    # glibc's default of 8 malloc arenas per core let the JVM's native
+    # memory, and so the measured RSS, swing between 1.4 and 2.9 GB across
+    # identical runs; 4 arenas is the value Hadoop sets for its JVMs
+    os.environ["MALLOC_ARENA_MAX"] = "4"
     os.environ["JAVA_TOOL_OPTIONS"] = (f"-Djava.io.tmpdir={tmp} "
                                        "-XX:-UsePerfData")
     submit = ["--conf", f"spark.local.dir={work}/spark-local"]
@@ -117,21 +124,19 @@ class Bench:
         self.tracer = Tracer(False, f"{args.workload}-{args.seed}")
         self.trace = bool(args.trace)
         self.spark = None
-        self.input_dir = None
+        self.input_dir = f"{work}/input"
+        self._prefixes: list = []
         self.attempted: Counter = Counter()
         self.failed: Counter = Counter()
         self.counts: dict = {}
 
     # -- session --------------------------------------------------------
     def start_session(self) -> float:
-        """Stop the live session, if any, and start one with ``get_spark``
-        (the first call also launches the JVM)."""
+        """Launch the JVM and start the session with ``get_spark``; returns
+        the time it took."""
+        t0 = time.perf_counter()
         from jsonld_spark.session import get_spark
 
-        if self.spark is not None:
-            self.tracer.bind(None)
-            self.spark.stop()
-        t0 = time.perf_counter()
         self.spark = get_spark(f"perfbench-{self.workload}")
         self.spark.range(1).collect()
         self.spark.sparkContext.setLogLevel("ERROR")
@@ -162,11 +167,20 @@ class Bench:
         _wait_children(timeout=30)
 
     # -- operations -----------------------------------------------------
-    def prefix(self, df) -> None:
-        """Force a lazy stage as a plan prefix — traced runs only."""
-        if self.tracer.enabled:
-            from workloads import force
-            force(df)
+    def prefix(self, df):
+        """Traced runs only: cache a lazy stage's output and force it
+        through the no-op sink, so the stage's span holds its own work and
+        the next stage reads the cache instead of re-running this one.
+        Untraced runs get ``df`` back untouched."""
+        if not self.tracer.enabled:
+            return df
+        from workloads import force
+
+        if not df.is_cached:
+            df = df.persist()
+            self._prefixes.append(df)
+        force(df)
+        return df
 
     def op(self, kind: str, fn, times: list[float]):
         """Run one timed operation; record its wall time or its failure."""
@@ -180,6 +194,9 @@ class Bench:
                 print(f"[perfbench] {kind} raised:\n{traceback.format_exc()}",
                       file=sys.stderr)
                 return None
+            finally:
+                while self._prefixes:
+                    self._prefixes.pop().unpersist()
             times.append(time.perf_counter() - t0)
         return res
 
@@ -270,7 +287,7 @@ def core_metrics(payloads: list[str], seed: int) -> dict:
 
 
 def per_layer_metrics(b: Bench, wl, counters: dict, overhead: float,
-                      session_starts: list[float]) -> dict:
+                      session_start: float) -> dict:
     """Fold spans, self times and event-log counters into the per-layer
     metrics. A layer the workload never calls reads 0."""
     import gen
@@ -285,11 +302,8 @@ def per_layer_metrics(b: Bench, wl, counters: dict, overhead: float,
         v = [selfs[s["id"]] for s in by_name.get(name, [])]
         return statistics.median(v) if v else 0.0
 
-    def dur(s):
-        return s["end"] - s["start"]
-
     def med_dur(name: str) -> float:
-        v = [dur(s) for s in by_name.get(name, [])]
+        v = [s["end"] - s["start"] for s in by_name.get(name, [])]
         return statistics.median(v) if v else 0.0
 
     def total(name: str, key: str) -> float:
@@ -300,13 +314,6 @@ def per_layer_metrics(b: Bench, wl, counters: dict, overhead: float,
         n = len(by_name.get(name, []))
         return total(name, key) / n if n else 0.0
 
-    # extract is timed as the scan+assemble+extract prefix minus the
-    # scan+assemble prefix that precedes it in the same operation
-    extract = []
-    for s in by_name.get("pipeline.extract", []):
-        sib = [x for x in tr.spans if x["parent"] == s["parent"]
-               and x["name"] == "interleaved.assemble"]
-        extract.append(dur(s) - (dur(sib[0]) if sib else 0.0))
     link = by_name.get("linking", [])
     payloads = [gen.assembled(r)[0] for r in wl.payload_rows()]
     c = b.counts
@@ -314,10 +321,10 @@ def per_layer_metrics(b: Bench, wl, counters: dict, overhead: float,
     cand_sim = c.get("lsh_candidates", 0)
     q_rows = c.get("query_rows", [])
     m = {
-        "session.start_s": statistics.median(session_starts),
+        "session.start_s": session_start,
         "interleaved.assemble_s": med_self("interleaved.assemble"),
         **core_metrics(payloads, b.seed),
-        "pipeline.extract_s": statistics.median(extract) if extract else 0.0,
+        "pipeline.extract_s": med_self("pipeline.extract"),
         "pipeline.dedup_s": med_self("pipeline.dedup"),
         "pipeline.python_s": per_op("pipeline.extract", "python_ms") / 1e3,
         "pipeline.arrow_bytes_in": per_op("pipeline.extract",
@@ -378,46 +385,42 @@ def run(args, root: str) -> tuple[dict, str]:
     lines = []
     try:
         with RssSampler() as rss:
-            # set-up = the median of three rounds of session start, input
-            # generation and first read (the first round also launches
-            # the JVM; the others restart the session)
-            setups, starts = [], []
-            for r in range(SETUP_ROUNDS):
-                b.input_dir = f"{work}/input-{r}"
-                t0 = time.perf_counter()
-                starts.append(b.start_session())
-                shares = wl.setup(b)
-                setups.append(time.perf_counter() - t0)
+            # set-up = JVM launch and session start, input generation and
+            # a first read of the inputs, as every spark-submit pays them
+            t0 = time.perf_counter()
+            start = b.start_session()
+            shares = wl.setup(b)
+            setup = time.perf_counter() - t0
             lines.append({"inputs": {args.workload: shares}})
             t_prep = time.perf_counter()
             wl.prepare_checks(b)
             t0 = time.perf_counter()
             phases = {"prepare_checks_s": t0 - t_prep}
             if b.trace:
-                # a cold cycle, a warm untraced one, a warm traced one: the
-                # wall-time difference of the last two is the overhead
+                # a cold cycle warms up, a warm one is traced, then the
+                # workload reruns its main operation untraced: the
+                # difference of the two warm wall times is the overhead
                 wl.measure(b, t0)
-                t1 = time.perf_counter()
-                wl.measure(b, t1)
-                t2 = time.perf_counter()
                 b.tracer.enabled = True
                 b.counts = {}
-                result = wl.measure(b, t2)
-                overhead = (time.perf_counter() - t2) - (t2 - t1)
+                result = wl.measure(b, time.perf_counter())
+                b.tracer.enabled = False
+                overhead = wl.trace_overhead(b, result["report"])
             else:
                 result = wl.measure(b, t0 + args.seconds)
             t_after = time.perf_counter()
             wl.after_measure(b)
             phases["after_measure_s"] = time.perf_counter() - t_after
         report = result["report"]
-        metrics = {"setup_s": statistics.median(setups),
+        metrics = {"setup_s": setup,
                    **result["e2e"], "peak_rss_mb": rss.peak / 2**20}
         ops = sum(b.attempted.values())
         bad = sum(b.failed.values())
         report.update({"setup_s": metrics["setup_s"],
-                       "setup_rounds_s": setups,
+                       "session_start_s": start,
                        "measured_s": t_after - t0, **phases,
                        "peak_rss_mb": metrics["peak_rss_mb"],
+                       "peak_rss_split": rss.peak_split,
                        "failed_ops_ratio": bad / ops if ops else 1.0,
                        "attempted_by_kind": dict(b.attempted),
                        "failed_by_kind": dict(b.failed)})
@@ -428,7 +431,7 @@ def run(args, root: str) -> tuple[dict, str]:
             spans_path = f"{root}/.perfbench_work/spans-{args.workload}-" \
                          f"{args.seed}.jsonl"
             b.tracer.dump(spans_path, counters)
-            layer = per_layer_metrics(b, wl, counters, overhead, starts)
+            layer = per_layer_metrics(b, wl, counters, overhead, start)
             lines.append({"spans": os.path.relpath(spans_path, root)})
             out = {k: {"value": layer[k], "unit": u}
                    for k, u in PER_LAYER.items()}

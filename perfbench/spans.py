@@ -146,7 +146,9 @@ def event_log_counters(log_dir: str) -> dict[int, dict]:
 _PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
-def _tree_rss_bytes(root: int) -> int:
+def _tree_rss_bytes(root: int) -> tuple[int, dict]:
+    """Summed RSS of ``root`` and its descendants, and its split into this
+    process, JVMs and other processes (the Python workers)."""
     children = defaultdict(list)
     rss = {}
     for d in os.listdir("/proc"):
@@ -162,29 +164,51 @@ def _tree_rss_bytes(root: int) -> int:
         ppid = int(stat[stat.rindex(")") + 2:].split()[1])
         children[ppid].append(int(d))
         rss[int(d)] = resident * _PAGE
+    split = {"driver_mb": 0.0, "jvm_mb": 0.0, "other_mb": 0.0, "other_n": 0}
     total, todo = 0, [root]
     while todo:
         pid = todo.pop()
-        total += rss.get(pid, 0)
+        r = rss.get(pid, 0)
+        total += r
+        if pid == root:
+            split["driver_mb"] += r / 2**20
+        elif _is_jvm(pid):
+            split["jvm_mb"] += r / 2**20
+        else:
+            split["other_mb"] += r / 2**20
+            split["other_n"] += 1
         todo.extend(children.get(pid, ()))
-    return total
+    return total, split
+
+
+def _is_jvm(pid: int) -> bool:
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            return f.read().split(b"\0", 1)[0].endswith(b"java")
+    except OSError:
+        return False
 
 
 class RssSampler:
     """Polls the summed RSS of this process tree (this process, the JVM,
     the Python workers) from ``/proc`` on a background thread and keeps
-    the peak."""
+    the peak and how it splits between the processes."""
 
     def __init__(self, interval_s: float = 0.1):
         self.interval_s = interval_s
         self.peak = 0
+        self.peak_split: dict = {}
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
+    def _sample(self) -> None:
+        total, split = _tree_rss_bytes(os.getpid())
+        if total > self.peak:
+            self.peak, self.peak_split = total, split
+
     def _run(self) -> None:
-        root = os.getpid()
         while not self._stop.is_set():
-            self.peak = max(self.peak, _tree_rss_bytes(root))
+            self._sample()
             self._stop.wait(self.interval_s)
 
     def __enter__(self) -> "RssSampler":
@@ -194,4 +218,4 @@ class RssSampler:
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join(timeout=5)
-        self.peak = max(self.peak, _tree_rss_bytes(os.getpid()))
+        self._sample()

@@ -113,3 +113,9 @@ def test_smoke_run(monkeypatch, workload, trace):
         # canonicalize and linking run only where the build runs
         jobs = result["metrics"]["canonicalize.jobs"]["value"]
         assert (jobs > 0) == (workload == "build_serve")
+        # LSH candidates are counted from the engine's own buckets; the
+        # verified pairs are a subset of them
+        m = result["metrics"]
+        if workload == "curate":
+            assert m["similarity.candidate_pairs"]["value"] > 0
+            assert 0 <= m["similarity.pair_yield"]["value"] <= 1

@@ -5,10 +5,11 @@ checks each output against an independent evaluation: the pure
 ``jsonld_spark.core`` for builds and upserts, DuckDB for SPARQL and for
 the curation operators' ``oracle_sql()`` rows.
 
-A workload has five steps: ``setup`` (input generation and a first read
+A workload has six steps: ``setup`` (input generation and a first read
 of the inputs on a started session, timed as set-up), ``prepare_checks``
 (untimed expectations), ``measure`` (whole cycles of the closed loop, one
-client), ``after_measure`` (untimed counts for the traced run) and
+client), ``trace_overhead`` (traced runs: the main operation rerun
+untraced), ``after_measure`` (untimed counts for the traced run) and
 ``payload_rows`` (the JSON-LD documents the pure-core layer metrics
 sample).
 
@@ -158,15 +159,20 @@ def _erase_bnodes(rows: Counter) -> Counter:
     return out
 
 
-def check_graph(spark, out_dir: str, expected: Counter, what: str) -> Counter:
-    """Every bucket audits ``ok`` and the stored triples equal
-    ``expected``; returns the stored triples."""
+def audit_manifests(spark, out_dir: str, what: str) -> None:
+    """Every bucket of the stored graph audits ``ok``."""
     from jsonld_spark.operators.materialize import verify_manifests
 
     bad = [r["part"] for r in verify_manifests(spark, out_dir).collect()
            if r["status"] != "ok"]
     if bad:
         raise CheckFailed(f"{what}: verify_manifests not ok for parts {bad}")
+
+
+def check_graph(spark, out_dir: str, expected: Counter, what: str) -> Counter:
+    """Every bucket audits ``ok`` and the stored triples equal
+    ``expected``; returns the stored triples."""
+    audit_manifests(spark, out_dir, what)
     actual = read_triples(out_dir)
     got, want = digest(actual), digest(expected)
     if got != want:
@@ -174,6 +180,20 @@ def check_graph(spark, out_dir: str, expected: Counter, what: str) -> Counter:
     if _erase_bnodes(actual) != _erase_bnodes(expected):
         raise CheckFailed(f"{what}: blank-node rows differ from expected")
     return actual
+
+
+def files_digest(path: str) -> str:
+    """sha256 over the relative path and bytes of every file under
+    ``path``: equal digests mean byte-identical trees."""
+    h = hashlib.sha256()
+    for d, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            full = os.path.join(d, f)
+            h.update(os.path.relpath(full, path).encode() + b"\0")
+            with open(full, "rb") as fh:
+                h.update(fh.read())
+    return h.hexdigest()
 
 
 def _dir_bytes(path: str) -> int:
@@ -196,8 +216,9 @@ def run_build(b, input_path: str, out_dir: str, resume: bool,
               n_buckets: int) -> dict:
     """scan → assemble → extract → c14n → link → bucketed write, the
     stage sequence of scripts/run_pipeline.py --canonicalize
-    --link-sameas. With tracing on, each lazy stage is also forced through
-    the no-op sink as a prefix of the same plan, inside its span."""
+    --link-sameas. With tracing on, each lazy stage's output is also
+    cached and forced through the no-op sink inside its span, so every
+    span holds its own stage's work and none re-runs an earlier one."""
     from pyspark.sql import functions as F
 
     from jsonld_spark.operators.canonicalize import canonicalize_triples
@@ -210,8 +231,7 @@ def run_build(b, input_path: str, out_dir: str, resume: bool,
     tr, spark = b.tracer, b.spark
     interleaved = spark.read.parquet(input_path)
     with tr.span("interleaved.assemble"):
-        assembled = assemble_documents(interleaved)
-        b.prefix(assembled)
+        assembled = b.prefix(assemble_documents(interleaved))
     with tr.span("pipeline.extract"):
         quads = extract_quads(assembled, include_media=True).persist()
         b.prefix(quads)
@@ -219,21 +239,18 @@ def run_build(b, input_path: str, out_dir: str, resume: bool,
         with tr.span("pipeline.errors"):
             n_errors = quads.where(F.col("error").isNotNull()).count()
         with tr.span("pipeline.dedup"):
-            triples = (quads.where(F.col("error").isNull()).drop("error")
-                       .dropDuplicates())
-            b.prefix(triples)
+            triples = b.prefix(quads.where(F.col("error").isNull())
+                               .drop("error").dropDuplicates())
         with tr.span("canonicalize"):
-            triples = canonicalize_triples(triples)
-            b.prefix(triples)
+            triples = b.prefix(canonicalize_triples(triples))
         with tr.span("linking") as sp:
             edges = (triples.where(F.col("pred") == gen.OWL_SAMEAS)
                      .where(F.col("obj_kind") == "iri")
                      .select(F.col("subj").alias("src"),
                              F.col("obj_value").alias("dst")))
             comps = connected_components(edges)
-            triples = link_triples(triples, comps) \
-                .where(F.col("pred") != gen.OWL_SAMEAS)
-            b.prefix(triples)
+            triples = b.prefix(link_triples(triples, comps)
+                               .where(F.col("pred") != gen.OWL_SAMEAS))
         if sp is not None:  # traced: counts outside the span
             sp["attrs"]["edges"] = edges.count()
             sp["attrs"]["components"] = \
@@ -364,16 +381,23 @@ class BuildServeWorkload:
             b.check("upsert", lambda: self._check_upsert(b, batch, u))
 
     def _check_build(self, b, out: str, m: dict, pending: bool) -> bool:
+        """A build stores the expected graph. A resume rerun writes no row,
+        every bucket still audits ``ok``, and the stored triples are
+        byte-identical to those of the checked build."""
         if m["errors"] != self.errors:
             raise CheckFailed(f"error docs {m['errors']} != {self.errors}")
         if pending != (m["pending"] > 0) or (not pending and m["rows"]):
             raise CheckFailed(f"unexpected materialize metrics {m}")
-        actual = check_graph(b.spark, out, self.built,
-                             "build" if pending else "resume")
-        if pending:
-            b.counts["bytes_written"] = _dir_bytes(f"{out}/triples")
-            b.counts["bnodes"] = len({v for r in actual for v in (r[2], r[5])
-                                      if v.startswith("_:")})
+        if not pending:
+            audit_manifests(b.spark, out, "resume")
+            if files_digest(f"{out}/triples") != self.checked_files:
+                raise CheckFailed("resume: stored triples changed")
+            return True
+        actual = check_graph(b.spark, out, self.built, "build")
+        self.checked_files = files_digest(f"{out}/triples")
+        b.counts["bytes_written"] = _dir_bytes(f"{out}/triples")
+        b.counts["bnodes"] = len({v for r in actual for v in (r[2], r[5])
+                                  if v.startswith("_:")})
         return True
 
     def _query(self, b, text: str):
@@ -418,16 +442,13 @@ class BuildServeWorkload:
 
         tr = b.tracer
         with tr.span("interleaved.assemble"):
-            assembled = assemble_documents(
-                b.spark.read.parquet(self.batch_path))
-            b.prefix(assembled)
+            assembled = b.prefix(assemble_documents(
+                b.spark.read.parquet(self.batch_path)))
         with tr.span("pipeline.extract"):
-            quads = extract_quads(assembled, include_media=True)
-            b.prefix(quads)
+            quads = b.prefix(extract_quads(assembled, include_media=True))
         with tr.span("pipeline.dedup"):
-            triples = (quads.where(F.col("error").isNull())
-                       .drop("error").dropDuplicates())
-            b.prefix(triples)
+            triples = b.prefix(quads.where(F.col("error").isNull())
+                               .drop("error").dropDuplicates())
         with tr.span("materialize.upsert"):
             return upsert_documents(triples, self.out,
                                     run_id=f"u{self.cycle}")
@@ -444,6 +465,23 @@ class BuildServeWorkload:
         b.counts.setdefault("upsert_buckets", []).append(m["affected"])
         b.counts.setdefault("upsert_rewrite_ratio", []).append(
             m["rows"] / max(1, old + sum(new.values())))
+
+    def trace_overhead(self, b, traced: dict) -> float | None:
+        """Build once more, untraced and checked; the traced cycle's build
+        wall time minus this one. The build is the operation whose tracing
+        adds work (forced and cached stage prefixes)."""
+        out = f"{b.work}/graph-untraced"
+        t: list[float] = []
+        m = b.op("build", lambda: run_build(
+            b, self.input, out, resume=False,
+            n_buckets=self.size["buckets"]), t)
+        if m is not None:
+            b.check("build",
+                    lambda: self._check_build(b, out, m, pending=True))
+        shutil.rmtree(out, ignore_errors=True)
+        if not t or not traced["op_s"]["build"]:
+            return None
+        return traced["op_s"]["build"][0] - t[0]
 
     def after_measure(self, b) -> None:
         self.con.close()
@@ -536,6 +574,18 @@ class CurateWorkload:
         force(df)
         return df
 
+    def trace_overhead(self, b, traced: dict) -> float | None:
+        """Run the ``curate_corpus`` row once more, untraced and checked;
+        the traced cycle's median time of that row minus this one."""
+        k = "curate_corpus"
+        t: list[float] = []
+        df = b.op(k, lambda: self._run(b, k), t)
+        if df is not None:
+            b.check(k, lambda: self._check(k, df))
+        if not t or traced[f"{k}_p50_s"] is None:
+            return None
+        return traced[f"{k}_p50_s"] - t[0]
+
     def _check(self, k: str, df) -> bool:
         got = _canon_rows(df.toPandas())
         if got != self.want[k]:
@@ -545,7 +595,10 @@ class CurateWorkload:
 
     def after_measure(self, b) -> None:
         """Pair yields of the two candidate generators and the funnel's
-        kept share, from the checked outputs and the generated inputs."""
+        kept share, from the checked outputs and the generated inputs
+        (traced runs only)."""
+        if not b.trace:
+            return
         docs = pq.read_table(f"{b.input_dir}/documents.parquet").to_pylist()
         text = {d["doc_id"]: d["text"] for d in docs}
         pairs = self.want["minhash_pairs"][1:]
@@ -557,7 +610,7 @@ class CurateWorkload:
         b.counts["minhash_verified"] = verified
         b.counts["kept_ratio"] = (len(self.want["curate_corpus"]) - 1) \
             / len(docs)
-        cand, ver = _lsh_pairs(f"{b.input_dir}/embeddings.parquet")
+        cand, ver = _lsh_pairs(b.spark, f"{b.input_dir}/embeddings.parquet")
         b.counts["lsh_candidates"] = cand
         b.counts["lsh_verified"] = ver
 
@@ -568,26 +621,29 @@ def _jaccard(a: str, b: str, k: int = 5) -> float:
     return len(sa & sb) / len(sa | sb)
 
 
-def _lsh_pairs(path: str) -> tuple[int, int]:
-    """(candidate pairs, pairs with cosine ≥ the row's threshold) of the
-    ``embedding_clusters`` row's banded hyperplane LSH, recomputed with
-    numpy from the same planes."""
-    import __spark_entry__ as E
+def _lsh_pairs(spark, path: str) -> tuple[int, int]:
+    """(candidate pairs, verified pairs) of the ``embedding_clusters``
+    row's banded hyperplane LSH, from the engine's own functions with the
+    row's planes and bands: candidates share a (band, bucket) of
+    ``lsh_bucket_arrays``; verified pairs are ``embedding_neardup``'s."""
+    from pyspark.sql import functions as F
 
-    t = pq.read_table(path)
-    vecs = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-    planes = np.array(E._lsh_planes(E._EMB_PLANES_N))
-    bits = (vecs @ planes.T) > 0
-    per = E._EMB_PLANES_PER_BAND
-    cand = np.zeros((len(vecs), len(vecs)), dtype=bool)
-    for band in range(E._EMB_BANDS):
-        key = bits[:, band * per:(band + 1) * per]
-        cand |= (key[:, None, :] == key[None, :, :]).all(axis=2)
-    iu = np.triu_indices(len(vecs), k=1)
-    cand = cand[iu]
-    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-    cos = (unit @ unit.T)[iu]
-    return int(cand.sum()), int((cand & (cos >= 0.4)).sum())
+    import __spark_entry__ as E
+    from jsonld_spark.operators.similarity import (embedding_neardup,
+                                                   lsh_bucket_arrays)
+
+    emb = spark.read.parquet(path)
+    planes = E._lsh_planes(E._EMB_PLANES_N)
+    banded = lsh_bucket_arrays(emb, planes, E._EMB_BANDS).select(
+        "vec_id", F.posexplode("buckets").alias("band", "bucket"))
+    cand = (banded.withColumnRenamed("vec_id", "id_a")
+            .join(banded.withColumnRenamed("vec_id", "id_b"),
+                  ["band", "bucket"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b").distinct().count())
+    verified = embedding_neardup(emb, 0.4, planes=planes,
+                                 bands=E._EMB_BANDS).count()
+    return cand, verified
 
 
 def _canon_rows(pdf) -> list[tuple]:
