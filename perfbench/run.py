@@ -6,13 +6,14 @@
 
 Run from the repository root. The command generates its inputs from
 ``--seed`` under ``.perfbench_work/`` in the current directory, starts one
-local Spark session (``local[N]``, N = min(4, cores)), sets up, measures the
-workload for ``--seconds`` in a closed loop with one client, checks every
-output, and prints a human-readable report followed by one JSON result
-line. With ``--trace 1`` it records spans around each call into a layer
-and Spark's event log, and reports the per-layer metrics instead of the
-end-to-end ones. It exits non-zero if any operation raised or failed its
-output check. See perfbench/README.md for the metric definitions.
+local Spark session (``local[N]``, N = min(4, cores) - 1), sets up and
+warms up, measures the workload for ``--seconds`` in a closed loop with
+one client, checks every output, and prints a human-readable report
+followed by one JSON result line. With ``--trace 1`` it records spans
+around each call into a layer and Spark's event log, and reports the
+per-layer metrics instead of the end-to-end ones. It exits non-zero if
+any operation raised or failed its output check. See perfbench/README.md
+for the metric definitions.
 """
 
 from __future__ import annotations
@@ -38,22 +39,24 @@ WORKLOADS = {
     # payloads), a resume rerun, then SPARQL templates and an upsert over
     # the stored buckets. The kernel, canonicalization, linking, the
     # bucketed write and the query engine all sit on its path. On 4 cores
-    # the build costs about 15 s of per-job overhead at any size up to a
-    # few thousand documents; 3000 documents is the most the run budget
-    # of the benchmark (about 70 s per run) allows.
+    # a cold build costs about 15 s of JIT and per-job overhead at any size
+    # up to a few thousand documents, which the warm-up (a build of
+    # warm_docs documents, priced per job, not per document) takes out of
+    # the measured one; 3000 documents is the most the run budget of the
+    # benchmark (about 70 s per run) allows.
     "build_serve": {"docs": 3000, "buckets": 16, "malformed_share": 0.03,
-                    "query_rounds": 1, "upsert_docs": 5},
+                    "query_rounds": 1, "upsert_docs": 5, "warm_docs": 200},
     # the cross-document curation operators (dedup, similarity,
     # textstats, sampling) on documents and embeddings with stated
     # exact/near-duplicate shares; no JSON-LD runs here, so a kernel or
-    # storage change predicts no movement. One cold pass per cycle; the
-    # DuckDB oracle of curate_corpus, run once per run, is quadratic in
-    # the documents.
+    # storage change predicts no movement. One pass per cycle, after a
+    # warm-up pass over the same tables in set-up; the DuckDB oracle of
+    # curate_corpus, run once per run, is quadratic in the documents.
     "curate": {"docs": 120, "vecs": 200, "exact_share": 0.05,
                "near_share": 0.1, "vec_near_share": 0.1, "passes": 1},
 }
 
-END_TO_END = {"setup_s": "s", "docs_per_s": "docs/s", "op_p50_s": "s",
+END_TO_END = {"setup_s": "s", "docs_per_s": "docs/s", "op_geomean_s": "s",
               "cycle_s": "s", "peak_rss_mb": "MB"}
 
 PER_LAYER = {
@@ -209,6 +212,13 @@ class Bench:
             print(f"[perfbench] {kind} check failed:\n"
                   f"{traceback.format_exc()}", file=sys.stderr)
             return None
+
+
+def _cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) jiffies of all CPUs since boot, from /proc/stat."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:9]]
+    return fields[7], sum(fields)
 
 
 def _children(pid: int) -> list[int]:
@@ -379,14 +389,19 @@ def run(args, root: str) -> tuple[dict, str]:
                         f"{args.workload}-{args.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     event_log = f"{work}/eventlog" if args.trace else None
-    _configure_environment(work, min(4, os.cpu_count() or 1), event_log)
+    # one core is left to this process, the JVM's JIT and GC threads and
+    # the OS: with a task on every core they preempt the tasks, and on 4
+    # cores queries and set-up took about 7 % longer (6 paired runs)
+    _configure_environment(work, max(1, min(4, os.cpu_count() or 1) - 1),
+                           event_log)
     b = Bench(args, work)
     wl = make_workload(args.workload)
     lines = []
     try:
+        steal0, total0 = _cpu_jiffies()
         with RssSampler() as rss:
-            # set-up = JVM launch and session start, input generation and
-            # a first read of the inputs, as every spark-submit pays them
+            # set-up = JVM launch and session start, input generation, a
+            # first read of the inputs and the workload's warm-up
             t0 = time.perf_counter()
             start = b.start_session()
             shares = wl.setup(b)
@@ -397,10 +412,9 @@ def run(args, root: str) -> tuple[dict, str]:
             t0 = time.perf_counter()
             phases = {"prepare_checks_s": t0 - t_prep}
             if b.trace:
-                # a cold cycle warms up, a warm one is traced, then the
-                # workload reruns its main operation untraced: the
-                # difference of the two warm wall times is the overhead
-                wl.measure(b, t0)
+                # a cycle is traced, then the workload reruns its main
+                # operation untraced: the difference of the two wall times
+                # is the overhead
                 b.tracer.enabled = True
                 b.counts = {}
                 result = wl.measure(b, time.perf_counter())
@@ -411,6 +425,7 @@ def run(args, root: str) -> tuple[dict, str]:
             t_after = time.perf_counter()
             wl.after_measure(b)
             phases["after_measure_s"] = time.perf_counter() - t_after
+        steal1, total1 = _cpu_jiffies()
         report = result["report"]
         metrics = {"setup_s": setup,
                    **result["e2e"], "peak_rss_mb": rss.peak / 2**20}
@@ -421,6 +436,10 @@ def run(args, root: str) -> tuple[dict, str]:
                        "measured_s": t_after - t0, **phases,
                        "peak_rss_mb": metrics["peak_rss_mb"],
                        "peak_rss_split": rss.peak_split,
+                       # CPU time the hypervisor gave other guests: the
+                       # main cause of run-to-run spread on a shared host
+                       "host_steal_share": (steal1 - steal0)
+                       / max(1, total1 - total0),
                        "failed_ops_ratio": bad / ops if ops else 1.0,
                        "attempted_by_kind": dict(b.attempted),
                        "failed_by_kind": dict(b.failed)})

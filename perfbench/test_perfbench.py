@@ -28,7 +28,7 @@ import workloads  # noqa: E402
 
 TINY = {
     "build_serve": {"docs": 40, "buckets": 4, "malformed_share": 0.1,
-                    "query_rounds": 1, "upsert_docs": 2},
+                    "query_rounds": 1, "upsert_docs": 2, "warm_docs": 20},
     "curate": {"docs": 60, "vecs": 60, "exact_share": 0.1,
                "near_share": 0.1, "vec_near_share": 0.2, "passes": 1},
 }
